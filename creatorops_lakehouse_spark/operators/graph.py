@@ -14,6 +14,24 @@ out-edges under a total order (the minimum), so counting (u -> v, u -> w,
 v -> w oriented) wedges closed by an oriented edge counts every triangle
 exactly once. The result is therefore identical to the naive a<b<c
 formulation a SQL oracle runs — same number, different join geometry.
+
+Join strategy, one per operator (A/B'd at sf0.1 against AQE-only and
+against a size-decided hint):
+
+- ``triangle_count`` carries no hints: AQE picks every join from runtime
+  shuffle statistics, which matched the hinted plans' walls.
+- ``khop_frontier_sizes`` and ``label_propagation`` always broadcast
+  their node-sized side (frontier/visited sets, labels). AQE alone lost
+  16% on LPA: it converts to a broadcast only after the edge side has
+  already been shuffled, every superstep.
+
+Precondition for the broadcasting operators: the node set fits a
+broadcast relation. A broadcast is collected to the driver and rebuilt
+as a hash relation (typically 5-10x its ~16 B/row raw width), so 2M
+nodes is a few hundred MB per build. Every graph built here is far
+below that: the largest is tools/lpa_rehearsal.py's 1M nodes, and the
+registry's trade graph has ~16k. A web-scale graph needs a shuffle-join
+variant, not a size switch in this one.
 """
 
 from __future__ import annotations
@@ -24,17 +42,10 @@ from pyspark.sql import DataFrame
 from creatorops_lakehouse_spark.operators.cache import scoped_persist
 
 
-#: above this edge count the closing-edge semi join stops broadcasting
-#: (the relation is one (v, w) pair per edge — 2M edges ≈ 32 MB raw ≈ a
-#: few hundred MB built, the same budget as BROADCAST_NODE_LIMIT rows)
-BROADCAST_EDGE_LIMIT = 2_000_000
-
-
 def triangle_count(
     edges: DataFrame,
     a: str = "a",
     b: str = "b",
-    broadcast_small: bool | None = None,
 ) -> DataFrame:
     """Exact triangle count + global clustering coefficient over an
     undirected simple edge list (one row per edge, ``a < b``, no
@@ -44,23 +55,10 @@ def triangle_count(
     clustering_ppm) with clustering_ppm = 3 * triangles * 10^6 div
     wedges (exact integer; 0 when the graph has no wedges).
 
-    Join strategy (``broadcast_small``, r14 — guide §3.1 broadcast the
-    provably small side, same discipline as pagerank/LPA/khop): the
-    degree table is one row per node and the closing-edge table one row
-    per edge — both tiny next to the WEDGE mass the degree-oriented join
-    produces (O(m^1.5)). Below ``BROADCAST_NODE_LIMIT`` nodes /
-    ``BROADCAST_EDGE_LIMIT`` edges they broadcast, so neither the edge
-    list (degree annotate) nor the wedge stream (closing semi join) is
-    ever exchanged for those joins; above the limits both fall back to
-    the shuffle path (a web-scale degree table outgrows any broadcast).
-    ``None`` auto-decides from one count of the persisted edge list and
-    one of the degree table; the count is identical either way — join
-    strategy cannot change which wedges close.
+    Join strategy: none forced. The degree-annotate and closing-edge
+    joins are left to AQE, which sizes them from the persisted edge and
+    degree tables at run time — so building the plan runs no job.
     """
-    from creatorops_lakehouse_spark.operators.pagerank import (
-        BROADCAST_NODE_LIMIT,
-    )
-
     e = scoped_persist(edges.select(F.col(a).alias("a"), F.col(b).alias("b")))
     # total degree per node (edges stored once per unordered pair)
     deg = scoped_persist(
@@ -69,19 +67,10 @@ def triangle_count(
         .groupBy("node")
         .agg(F.count(F.lit(1)).cast("long").alias("deg"))
     )
-    if broadcast_small is None:
-        broadcast_small = (
-            e.count() <= BROADCAST_EDGE_LIMIT
-            and deg.count() <= BROADCAST_NODE_LIMIT
-        )
-
-    def side(df: DataFrame) -> DataFrame:
-        return F.broadcast(df) if broadcast_small else df
-
     # orient: lower (deg, id) -> higher (deg, id); total order via tiebreak
     da = deg.select(F.col("node").alias("a"), F.col("deg").alias("deg_a"))
     db = deg.select(F.col("node").alias("b"), F.col("deg").alias("deg_b"))
-    ann = e.join(side(da), "a").join(side(db), "b")
+    ann = e.join(da, "a").join(db, "b")
     fwd = (F.col("deg_a") < F.col("deg_b")) | (
         (F.col("deg_a") == F.col("deg_b")) & (F.col("a") < F.col("b"))
     )
@@ -100,7 +89,7 @@ def triangle_count(
     closer = oriented.select(
         F.least("src", "dst").alias("v"), F.greatest("src", "dst").alias("w")
     )
-    tri = wedges.join(side(closer), ["v", "w"], "left_semi").agg(
+    tri = wedges.join(closer, ["v", "w"], "left_semi").agg(
         F.count(F.lit(1)).cast("long").alias("n_triangles")
     )
     stats = e.agg(F.count(F.lit(1)).cast("long").alias("n_edges")).crossJoin(
@@ -123,49 +112,29 @@ def triangle_count(
     )
 
 
-#: above this node count the k-hop visited/frontier sets stop broadcasting
-#: (same accounting as operators/pagerank.py::BROADCAST_NODE_LIMIT: a
-#: broadcast costs driver collect + hash-relation build per hop, so the
-#: visited set of a 10^9-node graph must fall back to a shuffle anti-join)
-BROADCAST_VISITED_LIMIT = 2_000_000
-
-
 def khop_frontier_sizes(
     edges: DataFrame,
     seed: DataFrame,
     hops: int = 3,
-    broadcast_visited: bool | None = None,
 ) -> DataFrame:
     """BFS frontier sizes from a seed set: ``(hop, n_new_nodes)`` for
     hops 1..``hops`` over a directed edge list ``(src, dst)``.
 
     Each hop is one equi-join of the edge list against the current
-    frontier, anti-joined against the visited set. On small graphs the
-    frontier/visited tables broadcast (edge scan stays shuffle-free); on
-    big graphs — ``broadcast_visited=None`` auto-decides from a one-off
-    count of the edge list's distinct-node upper bound — both joins fall
-    back to copartitioned shuffles, because a 10^9-node visited set
-    outgrows any broadcast (VERDICT r5 item 3). Both paths produce
-    identical output (parametrized in tests/test_graph_khop.py).
+    frontier, anti-joined against the visited set. The frontier and
+    visited sets always broadcast (module docstring precondition), so the
+    edge scan is never shuffled for either join.
     """
     e = scoped_persist(edges.select("src", "dst"))
-    if broadcast_visited is None:
-        # visited ⊆ node universe; bound it without materializing the set
-        n_nodes = e.select("dst").distinct().count() + seed.count()
-        broadcast_visited = n_nodes <= BROADCAST_VISITED_LIMIT
-
-    def side(df: DataFrame):
-        return F.broadcast(df) if broadcast_visited else df
-
     frontier = seed.select("node")
     visited = frontier
     rows = []
     for hop in range(1, hops + 1):
         frontier = scoped_persist(
-            e.join(side(frontier.withColumnRenamed("node", "src")), "src")
+            e.join(F.broadcast(frontier.withColumnRenamed("node", "src")), "src")
             .select(F.col("dst").alias("node"))
             .distinct()
-            .join(side(visited), "node", "left_anti")
+            .join(F.broadcast(visited), "node", "left_anti")
         )
         # no distinct: the frontier is distinct by construction and
         # anti-joined against visited, so the union is duplicate-free —
@@ -187,7 +156,6 @@ def label_propagation(
     iterations: int = 3,
     src: str = "src",
     dst: str = "dst",
-    broadcast_labels: bool | None = None,
 ) -> DataFrame:
     """Deterministic synchronous label propagation (community detection).
 
@@ -213,16 +181,11 @@ def label_propagation(
     Lineage truncates per superstep (localCheckpoint) like pagerank's
     superstep loop. Returns (node, label).
 
-    Join strategy (``broadcast_labels``): the labels table is one row per
-    node — tiny next to the edge list — so below
-    ``operators/pagerank.py::BROADCAST_NODE_LIMIT`` nodes it is BROADCAST
-    into the per-superstep vote join, exactly as pagerank broadcasts its
-    ranks: the edge list is never re-shuffled per superstep (only the
-    (node, label) vote rows move, with map-side partial counts). Above
-    the limit the join falls back to a shuffle (a 10^9-node label table
-    outgrows any broadcast). ``None`` auto-decides from a one-off node
-    count; the result is identical either way — join strategy can't
-    change the vote counts or the deterministic argmax.
+    Join strategy: the labels table is one row per node — tiny next to
+    the edge list — so it is always BROADCAST into the per-superstep vote
+    join and the fold-back join (module docstring precondition): the edge
+    list is never re-shuffled per superstep (only the (node, label) vote
+    rows move, with map-side partial counts).
 
     Fold-back note (r14 A/B, measured and kept as-is): a node appears in
     the winner table exactly when it has ≥ 1 out-edge, so the
@@ -235,29 +198,16 @@ def label_propagation(
     measured scale. The join form stays; the equivalence is pinned by
     tests/test_graph_lpa.py::test_no_out_edge_node_keeps_seed_label.
     """
-    import pyspark.sql.functions as F
-
-    from creatorops_lakehouse_spark.operators.pagerank import (
-        BROADCAST_NODE_LIMIT,
-    )
-
     nodes = (
         edges.select(F.col(src).alias("node"))
         .unionByName(edges.select(F.col(dst).alias("node")))
         .distinct()
     )
     labels = nodes.select("node", F.col("node").alias("label"))
-    if broadcast_labels is None:
-        broadcast_labels = nodes.count() <= BROADCAST_NODE_LIMIT
-
-    def side(df: DataFrame) -> DataFrame:
-        return F.broadcast(df) if broadcast_labels else df
 
     for _ in range(iterations):
         votes = (
-            edges.join(
-                side(labels.withColumnRenamed("node", dst)), dst
-            )
+            edges.join(F.broadcast(labels.withColumnRenamed("node", dst)), dst)
             .select(F.col(src).alias("node"), "label")
             .groupBy("node", "label")
             .agg(F.count(F.lit(1)).alias("c"))
@@ -281,7 +231,7 @@ def label_propagation(
             )
         ).select("node", F.col("w.label").alias("new_label"))
         labels = (
-            labels.join(side(winner), "node", "left")
+            labels.join(F.broadcast(winner), "node", "left")
             .select(
                 "node",
                 F.coalesce("new_label", "label").alias("label"),

@@ -50,16 +50,6 @@ from creatorops_lakehouse_spark.operators.cache import scoped_persist
 INIT_UNITS = 10**9
 
 
-#: below this node count the per-iteration ranks table is broadcast.
-#: A broadcast relation costs far more than its 16 B/row raw width — the
-#: rows are collected to the driver, rebuilt as a hash relation (typically
-#: 5-10x raw), and the ranks table is re-collected and re-broadcast EVERY
-#: one of the K iterations. 2M nodes ≈ 32 MB raw ≈ a few hundred MB of
-#: transient driver/executor footprint per step — comfortably safe; the
-#: old 10M default was not (ADVICE r5).
-BROADCAST_NODE_LIMIT = 2_000_000
-
-
 def pagerank(
     edges: DataFrame,
     src: str = "src",
@@ -67,7 +57,6 @@ def pagerank(
     iters: int = 6,
     damping: tuple[int, int] = (85, 100),
     check_dangling: bool = True,
-    broadcast_ranks: bool | None = None,
     weight: str | None = None,
     seeds: DataFrame | None = None,
     dangling: str | None = None,
@@ -87,7 +76,9 @@ def pagerank(
       satisfies this by construction).
     - ``"ignore"``: skip the check; dangling mass silently leaks (only
       correct when the caller has proven there are no dangling nodes and
-      wants to skip the verification pass).
+      wants to skip the verification pass). Any dst-only node is left out
+      of the output, which keeps the out-edge node universe of
+      ``pagerank_oracle_sql``.
     - ``"redistribute"``: the standard random-surfer treatment for real
       directed graphs (web links, citations): each iteration the total
       rank mass sitting on dangling nodes is re-spread uniformly —
@@ -117,16 +108,16 @@ def pagerank(
     the out-edge node universe.
 
     Join strategy: the ranks table is one row per node — tiny next to the
-    edge list — so by default it is BROADCAST into the per-iteration
-    contribute join when the node count is under ``BROADCAST_NODE_LIMIT``
-    (decided from a one-off count of the degree table; pass
-    ``broadcast_ranks`` to skip that count). Each iteration then costs one
-    scan of the persisted edge list + one aggregate shuffle on dst — no
-    edge re-shuffle. Above the limit (wikipedia/web-graph scale) the join
-    falls back to shuffle: the degree-annotated edge list is persisted
-    pre-partitioned on src and ranks arrive partitioned on node from the
-    previous iteration's dst-aggregate, so the SMJ re-shuffles only the
-    small side per step.
+    edge list — so it is always BROADCAST into the per-iteration
+    contribute join, and the out-degree table into the one-time degree
+    annotate. Each iteration then costs one scan of the persisted edge
+    list + one aggregate shuffle on dst — no edge re-shuffle. AQE alone
+    (no hint) measured 40-60% slower at sf0.1: it converts to a broadcast
+    only after the edge side has been shuffled. Precondition: the node
+    universe fits a broadcast relation (collected to the driver and
+    rebuilt as a hash relation, typically 5-10x its ~16 B/row raw width,
+    every iteration) — a few hundred MB at 2M nodes, far above any graph
+    built here.
     """
     d_num, d_den = damping
     # Fail-loud on a nonsense damping tuple (ADVICE r5): d_num > d_den
@@ -216,8 +207,6 @@ def pagerank(
                 "symmetrize the edge list, pass dangling='redistribute', "
                 "or handle dangling mass first"
             )
-    dangling_nodes = None
-    n_nodes = None
     if mode == "redistribute":
         # Node universe widens to src ∪ dst; the dangling set (nodes with
         # no out-edges) is re-read every iteration for the mass sum.
@@ -232,21 +221,12 @@ def pagerank(
         )
     else:
         universe_nodes = deg.select("node")
-    if broadcast_ranks is None:
-        n_universe = n_nodes if n_nodes is not None else deg.count()
-        broadcast_ranks = n_universe <= BROADCAST_NODE_LIMIT
-    # Attach out-degrees. Small graphs: deg broadcasts -> map-side join,
-    # no edge shuffle at all. Big graphs: pre-partition edges on src so
-    # the per-iteration SMJ against ranks reuses this partitioning.
-    if broadcast_ranks:
-        annotated = e.join(
+    # Attach out-degrees: deg broadcasts -> map-side join, no edge shuffle.
+    ed = scoped_persist(
+        e.join(
             F.broadcast(deg.select(F.col("node").alias("e_src"), "outdeg")), "e_src"
         )
-    else:
-        annotated = e.repartition(F.col("e_src")).join(
-            deg.select(F.col("node").alias("e_src"), "outdeg"), "e_src"
-        )
-    ed = scoped_persist(annotated)
+    )
     # The node universe: every node has an out-edge (checked above), so
     # deg IS the node set, annotated with its per-node teleport mass —
     # uniform by default, restricted to the seed set for personalized
@@ -285,11 +265,10 @@ def pagerank(
         # the per-iteration dangling-mass sum then filters the (small,
         # checkpointed) ranks table instead of broadcast-joining the
         # dangling set into every iteration's plan. The one-time attach
-        # join broadcasts under the same node-count decision as the
-        # per-iteration ranks (dangling ⊆ the node universe).
-        dang_flagged = dangling_nodes.withColumn("_dang", F.lit(True))
+        # join broadcasts like the per-iteration ranks (dangling ⊆ the
+        # node universe).
         node_tele = node_tele.join(
-            F.broadcast(dang_flagged) if broadcast_ranks else dang_flagged,
+            F.broadcast(dangling_nodes.withColumn("_dang", F.lit(True))),
             "node",
             "left",
         ).select(
@@ -326,9 +305,10 @@ def pagerank(
                     F.expr(f"_dm div {n_nodes}").cast("long").alias("_share")
                 )
             )
-        rsel = ranks.select(F.col("node").alias("e_src"), "units")
-        rhs = F.broadcast(rsel) if broadcast_ranks else rsel
-        contrib = ed.join(rhs, "e_src").select(
+        contrib = ed.join(
+            F.broadcast(ranks.select(F.col("node").alias("e_src"), "units")),
+            "e_src",
+        ).select(
             F.col("e_dst").alias("node"),
             F.expr("(units * w) div outdeg").alias("c"),
         )
@@ -394,7 +374,13 @@ def pagerank(
         # recomputes its broadcasts inside the consumer job and costs more
         # than the saved checkpoint job.
         ranks = ranks.localCheckpoint(eager=True)
-    return ranks.select("node", F.col("units").alias("rank_units"))
+    out = ranks.select("node", F.col("units").alias("rank_units"))
+    if mode == "ignore":
+        # Unchecked dst-only nodes pick up inflow rows in the aggregate;
+        # the output node set is still the out-edge universe, exactly as
+        # in pagerank_oracle_sql.
+        out = out.join(F.broadcast(nodes.select("node")), "node", "left_semi")
+    return out
 
 
 def pagerank_oracle_sql(

@@ -20,15 +20,14 @@ Scale design (100 TB corpus):
   explode + per-doc ``array_distinct`` (map-side) + hash aggregate; the
   shuffle carries (token, partial count) pairs, never text. Word-level
   vocabularies are heavy-tailed but bounded (≪ corpus size).
-- Scoring joins token occurrences against the vocabulary. By default the
-  vocabulary is BROADCAST, so the corpus side never shuffles — and the
+- Scoring joins token occurrences against the vocabulary. The vocabulary
+  is always BROADCAST, so the corpus side never shuffles — and the
   per-doc aggregation that follows combines map-side (explode preserves
   row locality), putting one (doc, k, rarity_sum) row per document into
-  the shuffle. ``broadcast_vocab=False`` falls back to a shuffle join on
-  ``tok`` for vocabularies too large to broadcast; note that join skews on
-  stopword-grade tokens — prefer raising the broadcast threshold or
-  pre-pruning the vocabulary head (df above a floor contributes weight 0
-  at ``scale // df`` granularity anyway).
+  the shuffle. Precondition: the vocabulary fits a broadcast relation. A
+  shuffle join on ``tok`` would skew on stopword-grade tokens anyway; a
+  vocabulary past that size should be pruned at the head first (df above
+  a floor contributes weight 0 at ``scale // df`` granularity).
 - Head/tail assignment compares each doc's mean against CORPUS-relative
   bounds as cross-multiplied integers (no floating division, no global
   sort): the one-row corpus aggregate broadcasts, and at 100 TB the same
@@ -70,7 +69,6 @@ def rarity_scores(
     text_col: str = "text",
     id_col: str = "doc_id",
     scale: int = RARITY_SCALE,
-    broadcast_vocab: bool = True,
 ) -> DataFrame:
     """Per-document rarity: (id_col, n_tokens, rarity_sum, rarity_mean_c).
 
@@ -79,11 +77,11 @@ def rarity_scores(
 
     Documents with zero tokens carry no rarity evidence and are omitted
     (they are the length gate's job, not the rarity gate's)."""
-    vocab = token_doc_freq(corpus, text_col, id_col).select(
-        "tok", _idiv(F.lit(scale), F.col("df")).alias("w")
+    vocab = F.broadcast(
+        token_doc_freq(corpus, text_col, id_col).select(
+            "tok", _idiv(F.lit(scale), F.col("df")).alias("w")
+        )
     )
-    if broadcast_vocab:
-        vocab = F.broadcast(vocab)
     occurrences = corpus.select(
         F.col(id_col), F.explode(tokens(F.col(text_col))).alias("tok")
     )

@@ -47,7 +47,8 @@ def split_column(
     removing other rows never moves a row across splits.
     """
     total = sum(splits.values())
-    assert total <= 1.0 + 1e-9, f"split fractions sum to {total} > 1"
+    if total > 1.0 + 1e-9:
+        raise ValueError(f"split fractions sum to {total} > 1")
     bucket = hash_bucket(key, n_buckets)
     expr = None
     cum = 0.0
@@ -172,8 +173,10 @@ def epoch_orders(
     an ``epoch`` column."""
     # fail loud (ADVICE r13): an existing `epoch` column would make the
     # crossJoin/join silently ambiguous instead of erroring usefully
-    assert "epoch" not in df.columns, "epoch_orders: df already has 'epoch'"
-    assert epochs, "epoch_orders: empty epoch list"
+    if "epoch" in df.columns:
+        raise ValueError("epoch_orders: df already has 'epoch'")
+    if not epochs:
+        raise ValueError("epoch_orders: empty epoch list")
     width = max(1, -(-n_buckets // n_range_buckets))
     spark = df.sparkSession
     ep = F.broadcast(

@@ -90,9 +90,8 @@ def graph_pagerank_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
         directed.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
     # Symmetrized by construction -> no dangling nodes; skip the extra
-    # pass. ~16k nodes -> broadcast the per-iteration ranks (skip the
-    # auto-decide count).
-    ranks = pagerank(edges, iters=_ITERS, check_dangling=False, broadcast_ranks=True)
+    # pass.
+    ranks = pagerank(edges, iters=_ITERS, check_dangling=False)
     return (
         ranks.select(
             F.when(F.col("node") % 2 == 0, "customer")
@@ -136,9 +135,7 @@ def graph_pagerank_directed(spark: SparkSession, sf_dir: str) -> DataFrame:
     the symmetrized query, hash-checked against the unrolled-CTE oracle
     extended with per-step dangling-mass scalar CTEs."""
     directed = _trade_directed(spark, sf_dir)
-    ranks = pagerank(
-        directed, iters=_ITERS, dangling="redistribute", broadcast_ranks=True
-    )
+    ranks = pagerank(directed, iters=_ITERS, dangling="redistribute")
     return (
         ranks.select(
             F.when(F.col("node") % 2 == 0, "customer")
@@ -272,12 +269,11 @@ def graph_khop_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     Classic frontier expansion (operators/graph.py::khop_frontier_sizes):
     each hop is one equi-join of the (persisted, degree-bounded) edge
     list against the current frontier, anti-joined against the visited
-    set. The visited/frontier joins broadcast below
-    BROADCAST_VISITED_LIMIT nodes and auto-fall back to copartitioned
-    shuffle anti-joins above it (a 10^9-node visited set outgrows any
-    broadcast). The hop-3 frontier of a dense bipartite graph collapses
-    to near zero (almost everything is within 2 hops of a supplier) —
-    the query pins that structural fact exactly.
+    set. The visited/frontier sets always broadcast (the trade graph has
+    ~16k nodes), so the edge list is never shuffled for those joins. The
+    hop-3 frontier of a dense bipartite graph collapses to near zero
+    (almost everything is within 2 hops of a supplier) — the query pins
+    that structural fact exactly.
     """
     from creatorops_lakehouse_spark.operators.graph import khop_frontier_sizes
 
@@ -287,7 +283,7 @@ def graph_khop_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).coalesce(8)
     s = load(spark, sf_dir, "supplier")
     seed = s.agg((F.min("s_suppkey") * 2 + 1).alias("node"))
-    return khop_frontier_sizes(edges, seed, hops=3, broadcast_visited=True)
+    return khop_frontier_sizes(edges, seed, hops=3)
 
 
 _WEDGES_SQL = """
@@ -354,9 +350,7 @@ def graph_pagerank_weighted_trade(spark: SparkSession, sf_dir: str) -> DataFrame
             F.col("dst").alias("src"), F.col("src").alias("dst"), "w"
         )
     )
-    ranks = pagerank(
-        edges, iters=4, weight="w", check_dangling=False, broadcast_ranks=True
-    )
+    ranks = pagerank(edges, iters=4, weight="w", check_dangling=False)
     return (
         ranks.select(
             F.when(F.col("node") % 2 == 0, "customer")
@@ -401,9 +395,7 @@ def graph_pagerank_personalized(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     s = load(spark, sf_dir, "supplier").filter(F.col("s_suppkey") < 5)
     seeds = s.select((F.col("s_suppkey") * 2 + 1).alias("node"))
-    ranks = pagerank(
-        edges, iters=4, seeds=seeds, check_dangling=False, broadcast_ranks=True
-    )
+    ranks = pagerank(edges, iters=4, seeds=seeds, check_dangling=False)
     return (
         ranks.filter(F.col("rank_units") > 0)
         .select(
@@ -531,9 +523,8 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = directed.unionByName(
         directed.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
-    # ~16k nodes -> broadcast the per-superstep labels (same decision as
-    # the pagerank queries' broadcast_ranks=True; skips the auto count)
-    out = label_propagation(edges, iterations=_LPA_ITERS, broadcast_labels=True)
+    # ~16k nodes: the operator broadcasts the per-superstep labels
+    out = label_propagation(edges, iterations=_LPA_ITERS)
     return out.select(
         F.col("node").cast("long").alias("node"),
         F.col("label").cast("long").alias("label"),

@@ -38,13 +38,10 @@ def test_triangle_free_bipartite(spark):
     assert r.clustering_ppm == 0  # ...but none of them closes
 
 
-def test_broadcast_and_shuffle_paths_agree(spark):
-    """r14: the deg/closing-edge joins broadcast below the size limits
-    and fall back to shuffles above — both paths must count identically
-    (join strategy cannot change which wedges close)."""
+def test_k7_plus_disjoint_triangle(spark):
+    # K7 plus a separate triangle: C(7,3) + 1 triangles, 21 + 3 edges,
+    # 7*C(6,2) + 3*C(2,2) wedges
     edges = list(combinations(range(7), 2)) + [(10, 11), (11, 12), (10, 12)]
-    df = spark.createDataFrame(edges, ["a", "b"])
-    bc = triangle_count(df, broadcast_small=True).collect()[0]
-    sh = triangle_count(df, broadcast_small=False).collect()[0]
-    assert bc == sh
-    assert bc.n_triangles == 35 + 1  # C(7,3) + the separate triangle
+    r = _run(spark, edges)
+    assert (r.n_nodes, r.n_edges, r.n_wedges, r.n_triangles) == (10, 24, 108, 36)
+    assert r.clustering_ppm == 1_000_000

@@ -61,22 +61,9 @@ def test_matches_python_reference(spark, small_graph):
     edges = spark.createDataFrame(small_graph, ["src", "dst"])
     got = {
         r["node"]: r["rank_units"]
-        for r in pagerank(edges, iters=6, broadcast_ranks=True).collect()
+        for r in pagerank(edges, iters=6).collect()
     }
     assert got == _py_pagerank(small_graph, iters=6)
-
-
-def test_shuffle_path_matches_broadcast_path(spark, small_graph):
-    edges = spark.createDataFrame(small_graph, ["src", "dst"])
-    bc = {
-        r["node"]: r["rank_units"]
-        for r in pagerank(edges, iters=3, broadcast_ranks=True).collect()
-    }
-    sh = {
-        r["node"]: r["rank_units"]
-        for r in pagerank(edges, iters=3, broadcast_ranks=False).collect()
-    }
-    assert bc == sh
 
 
 def test_no_inflow_node_keeps_teleport_mass(spark):
@@ -88,7 +75,7 @@ def test_no_inflow_node_keeps_teleport_mass(spark):
     df = spark.createDataFrame(edges, ["src", "dst"])
     got = {
         r["node"]: r["rank_units"]
-        for r in pagerank(df, iters=4, broadcast_ranks=True).collect()
+        for r in pagerank(df, iters=4).collect()
     }
     want = _py_pagerank(edges, iters=4)
     assert got == want
@@ -113,7 +100,7 @@ def test_oracle_sql_matches_spark(spark, small_graph):
     edges = spark.createDataFrame(small_graph, ["src", "dst"])
     got = {
         r["node"]: r["rank_units"]
-        for r in pagerank(edges, iters=4, broadcast_ranks=True).collect()
+        for r in pagerank(edges, iters=4).collect()
     }
     values = ", ".join(f"({s}, {d})" for s, d in small_graph)
     sql = pagerank_oracle_sql(
@@ -123,12 +110,30 @@ def test_oracle_sql_matches_spark(spark, small_graph):
     assert got == want
 
 
+def test_ignore_mode_keeps_out_edge_node_set(spark):
+    """dangling='ignore' over a graph with one dst-only node (4): the
+    output node set is the out-edge universe, as in the DuckDB oracle."""
+    duckdb = pytest.importorskip("duckdb")
+    graph = [(1, 2), (2, 1), (2, 3), (3, 1), (3, 4)]
+    edges = spark.createDataFrame(graph, ["src", "dst"])
+    got = {
+        r["node"]: r["rank_units"]
+        for r in pagerank(edges, iters=4, dangling="ignore").collect()
+    }
+    values = ", ".join(f"({s}, {d})" for s, d in graph)
+    sql = pagerank_oracle_sql(
+        f"SELECT * FROM (VALUES {values}) AS t(src, dst)", iters=4
+    )
+    assert got == dict(duckdb.connect().execute(sql).fetchall())
+    assert set(got) == {1, 2, 3}
+
+
 def test_weighted_matches_python_reference(spark):
     wedges = [(1, 2, 3), (1, 3, 1), (2, 1, 2), (3, 1, 5), (3, 2, 1)]
     df = spark.createDataFrame(wedges, ["src", "dst", "w"])
     got = {
         r["node"]: r["rank_units"]
-        for r in pagerank(df, iters=5, weight="w", broadcast_ranks=True).collect()
+        for r in pagerank(df, iters=5, weight="w").collect()
     }
     assert got == _py_pagerank(wedges, iters=5)
     # weights matter: node 2 (heavy inflow from 1's w=3 edge) must differ
@@ -143,7 +148,7 @@ def test_weighted_oracle_sql_matches_spark(spark):
     df = spark.createDataFrame(wedges, ["src", "dst", "w"])
     got = {
         r["node"]: r["rank_units"]
-        for r in pagerank(df, iters=4, weight="w", broadcast_ranks=True).collect()
+        for r in pagerank(df, iters=4, weight="w").collect()
     }
     values = ", ".join(f"({s}, {d}, {w})" for s, d, w in wedges)
     sql = pagerank_oracle_sql(
@@ -159,9 +164,7 @@ def test_personalized_teleports_only_to_seeds(spark, small_graph):
     seeds = spark.createDataFrame([(0,)], ["node"])
     got = {
         r["node"]: r["rank_units"]
-        for r in pagerank(
-            edges, iters=5, seeds=seeds, broadcast_ranks=True
-        ).collect()
+        for r in pagerank(edges, iters=5, seeds=seeds).collect()
     }
     assert got == _py_pagerank(small_graph, iters=5, seeds={0})
     # proximity ordering: the seed and its direct predecessors dominate
@@ -182,7 +185,7 @@ def test_mass_roughly_conserved(spark, small_graph):
     edges = spark.createDataFrame(small_graph, ["src", "dst"])
     total = sum(
         r["rank_units"]
-        for r in pagerank(edges, iters=6, broadcast_ranks=True).collect()
+        for r in pagerank(edges, iters=6).collect()
     )
     n_nodes = len({s for s, _ in small_graph})
     assert total <= n_nodes * INIT_UNITS
@@ -192,14 +195,14 @@ def test_mass_roughly_conserved(spark, small_graph):
 def test_nonpositive_weight_raises(spark):
     edges = spark.createDataFrame([(1, 2, 1), (2, 1, 0)], ["src", "dst", "w"])
     with pytest.raises(ValueError, match="non-positive or NULL weight"):
-        pagerank(edges, iters=2, weight="w", broadcast_ranks=True)
+        pagerank(edges, iters=2, weight="w")
 
 
 def test_unknown_seed_raises(spark, small_graph):
     edges = spark.createDataFrame(small_graph, ["src", "dst"])
     seeds = spark.createDataFrame([(0,), (999,)], ["node"])  # 999 not a node
     with pytest.raises(ValueError, match="seed node"):
-        pagerank(edges, iters=2, seeds=seeds, broadcast_ranks=True)
+        pagerank(edges, iters=2, seeds=seeds)
 
 
 def _py_pagerank_redistribute(edges, iters=4, damping=(85, 100)):
@@ -238,9 +241,7 @@ def test_redistribute_matches_python_reference(spark, dangling_graph):
     edges = spark.createDataFrame(dangling_graph, ["src", "dst"])
     got = {
         r["node"]: r["rank_units"]
-        for r in pagerank(
-            edges, iters=4, dangling="redistribute", broadcast_ranks=True
-        ).collect()
+        for r in pagerank(edges, iters=4, dangling="redistribute").collect()
     }
     assert got == _py_pagerank_redistribute(dangling_graph, iters=4)
     # sinks hold rank (they receive inflow) but the system mass stays
@@ -248,23 +249,12 @@ def test_redistribute_matches_python_reference(spark, dangling_graph):
     assert set(got) == {1, 2, 3, 4, 5}
 
 
-def test_redistribute_both_join_paths_match(spark, dangling_graph):
-    edges = spark.createDataFrame(dangling_graph, ["src", "dst"])
-    bc = pagerank(edges, iters=3, dangling="redistribute", broadcast_ranks=True)
-    sh = pagerank(edges, iters=3, dangling="redistribute", broadcast_ranks=False)
-    assert {(r.node, r.rank_units) for r in bc.collect()} == {
-        (r.node, r.rank_units) for r in sh.collect()
-    }
-
-
 def test_redistribute_oracle_sql_matches_spark(spark, dangling_graph):
     duckdb = pytest.importorskip("duckdb")
     edges = spark.createDataFrame(dangling_graph, ["src", "dst"])
     got = {
         r["node"]: r["rank_units"]
-        for r in pagerank(
-            edges, iters=4, dangling="redistribute", broadcast_ranks=True
-        ).collect()
+        for r in pagerank(edges, iters=4, dangling="redistribute").collect()
     }
     values = ", ".join(f"({s}, {d})" for s, d in dangling_graph)
     sql = pagerank_oracle_sql(
@@ -302,17 +292,15 @@ def test_unit_scale_oracle_bit_equality(spark, small_graph):
     for scale in (10**9, 10**6):
         got = {
             r["node"]: r["rank_units"]
-            for r in pagerank(
-                edges, iters=6, broadcast_ranks=True, unit_scale=scale
-            ).collect()
+            for r in pagerank(edges, iters=6, unit_scale=scale).collect()
         }
         sql = pagerank_oracle_sql(edges_sql, iters=6, unit_scale=scale)
         want = dict(duckdb.connect().execute(sql).fetchall())
         assert got == want, f"scale={scale}"
     # downshifted ranks are ~1000x the coarser resolution of the default,
     # preserving relative order on this graph
-    hi = pagerank(edges, iters=6, broadcast_ranks=True, unit_scale=10**9)
-    lo = pagerank(edges, iters=6, broadcast_ranks=True, unit_scale=10**6)
+    hi = pagerank(edges, iters=6, unit_scale=10**9)
+    lo = pagerank(edges, iters=6, unit_scale=10**6)
     hi_order = [r["node"] for r in hi.orderBy("rank_units", "node").collect()]
     lo_order = [r["node"] for r in lo.orderBy("rank_units", "node").collect()]
     assert hi_order == lo_order

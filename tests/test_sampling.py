@@ -173,6 +173,24 @@ def test_dsir_acceptance_is_deterministic(spark):
     assert run() == run()
 
 
+def test_guards_raise_value_error(spark):
+    # ValueError, not assert: the guards must survive ``python -O``
+    import pytest
+
+    from creatorops_lakehouse_spark.operators.sampling import (
+        epoch_orders,
+        split_column,
+    )
+
+    with pytest.raises(ValueError, match="sum to"):
+        split_column(F.col("doc_id"), {"train": 0.8, "eval": 0.3})
+    df = spark.range(0, 10).select(F.col("id").alias("doc_id"))
+    with pytest.raises(ValueError, match="already has 'epoch'"):
+        epoch_orders(df.withColumn("epoch", F.lit(0)), "doc_id", [0])
+    with pytest.raises(ValueError, match="empty epoch list"):
+        epoch_orders(df, "doc_id", [])
+
+
 def test_epoch_order_permutes_differently_but_reproducibly(spark):
     from creatorops_lakehouse_spark.operators.sampling import epoch_order
 

@@ -342,7 +342,7 @@ def _pagerank(docs):
     edges = directed.unionAll(
         directed.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
-    n = pagerank(edges, iters=6, check_dangling=False, broadcast_ranks=True).count()
+    n = pagerank(edges, iters=6, check_dangling=False).count()
     directed.unpersist()
     return n
 

@@ -1,4 +1,4 @@
-"""Contract compiler: declarative validation rules → Spark Column predicates.
+"""Contract compiler: declarative validation rules → Spark SQL predicates.
 
 Implements the full documented contract surface of the reference — the
 runtime checks in pipelines/silver/transform_local.py:94-169 PLUS the
@@ -15,22 +15,29 @@ documented-but-unimplemented semantics (SURVEY.md §2.9):
   {parsing, validation, enum_check, metric_check} + validation_errors
   JSON array of every failed rule (not just the first).
 - D8 expectations file (contracts/expectations.yml, empty in the
-  reference): rules can be loaded from a YAML list and compiled the same
-  way.
+  reference): rules can be loaded from a YAML list. A rule's predicate is
+  a Spark SQL boolean string in both cases, so the built-in rules and the
+  expectations file share one format.
 
-Scale note: compilation is driver-side metadata only — the emitted plan is
-a single Project over native Column expressions (no UDFs, no shuffles), so
-whole-stage codegen fuses all checks into one pass over the scan.
+Scale note: compilation is driver-side text only. ``compile_contract``
+emits one SQL expression per verdict column, and the silver projections
+are ``selectExpr`` lists, so a medallion day's silver split (480 events,
+4 cores) costs 150-250 py4j round trips; built call by call through
+PySpark ``Column``s it cost 5,400-6,000. The plan is a single Project over
+native expressions (no UDFs, no shuffles), so whole-stage codegen fuses
+all checks into one pass over the scan.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
 
-import pyspark.sql.functions as F
-from pyspark.sql import Column
+from creatorops_lakehouse_spark.schemas import EVENT_TYPES, sql_string, sql_timestamp
 
-from creatorops_lakehouse_spark.schemas import EVENT_TYPES
+#: ``parsed.occurredAt`` as a timestamp; NULL when absent or not ISO-8601 Zulu
+#: (FIXTURES.md A1).
+OCCURRED_AT = "try_to_timestamp(parsed.occurredAt, 'yyyy-MM-dd\\'T\\'HH:mm:ss\\'Z\\'')"
+
 
 #: Reject-reason codes in priority order (first failing rule names the
 #: row's reject_reason, matching the when-chain at transform_local.py:157-169).
@@ -38,96 +45,98 @@ from creatorops_lakehouse_spark.schemas import EVENT_TYPES
 class Rule:
     reason: str  # reject_reason code
     stage: str  # reject_stage ∈ {parsing, validation, enum_check, metric_check}
-    predicate: Column  # True ⇒ row PASSES this rule
+    predicate: str  # Spark SQL boolean expression; TRUE ⇒ row PASSES this rule
 
 
 def default_rules(as_of_ts: str | None = None) -> list[Rule]:
-    """The creatorops event contract, compiled over the parsed-event columns.
+    """The creatorops event contract, over the parsed-event columns.
 
     Expects columns produced by silver.parse(): ``parse_ok`` plus the
     ``parsed.*`` struct fields. ``as_of_ts`` ('YYYY-MM-DD HH:MM:SS', UTC)
     parameterizes the D4 future-timestamp guard; None disables it.
     """
-    p = lambda field: F.col(f"parsed.{field}")  # noqa: E731
-    reader_event = p("eventType").isin("reader_engagement", "reader_dropoff")
+    reader_event = "parsed.eventType IN ('reader_engagement', 'reader_dropoff')"
     # try_cast, not cast: Spark 4 runs with ANSI mode ON, where a plain cast
     # of a non-numeric metric string (wordCount='abc') raises
     # CAST_INVALID_INPUT and aborts the whole job. try_cast yields NULL, and
     # the NON_NUMERIC_* rules below turn present-but-unparseable values into
     # quarantine rows instead of a crash.
-    word_raw = p("metrics").getItem("wordCount")
-    rev_raw = p("metrics").getItem("revisionCount")
-    score_raw = p("metrics").getItem("engagementScore")
-    word = word_raw.try_cast("int")
-    rev = rev_raw.try_cast("int")
-    score = score_raw.try_cast("double")
+    word_raw = "parsed.metrics['wordCount']"
+    rev_raw = "parsed.metrics['revisionCount']"
+    score_raw = "parsed.metrics['engagementScore']"
+    word = f"try_cast({word_raw} AS INT)"
+    rev = f"try_cast({rev_raw} AS INT)"
+    score = f"try_cast({score_raw} AS DOUBLE)"
+    event_types = ", ".join(map(sql_string, EVENT_TYPES))
 
     rules = [
-        Rule("JSON_PARSE_FAILED", "parsing", F.col("parse_ok")),
-        Rule("MISSING_EVENT_ID", "validation", p("eventId").isNotNull()),
-        Rule("MISSING_EVENT_TYPE", "validation", p("eventType").isNotNull()),
+        Rule("JSON_PARSE_FAILED", "parsing", "parse_ok"),
+        Rule("MISSING_EVENT_ID", "validation", "parsed.eventId IS NOT NULL"),
+        Rule("MISSING_EVENT_TYPE", "validation", "parsed.eventType IS NOT NULL"),
         Rule(
             "INVALID_EVENT_TYPE",
             "enum_check",
-            p("eventType").isNull() | p("eventType").isin(*EVENT_TYPES),
+            f"parsed.eventType IS NULL OR parsed.eventType IN ({event_types})",
         ),
-        Rule("MISSING_EVENT_VERSION", "validation", p("eventVersion").isNotNull()),
+        Rule("MISSING_EVENT_VERSION", "validation", "parsed.eventVersion IS NOT NULL"),
         Rule(
             "INVALID_EVENT_VERSION",
             "validation",
-            p("eventVersion").isNull() | (p("eventVersion") >= 1),
+            "parsed.eventVersion IS NULL OR parsed.eventVersion >= 1",
         ),
         Rule(
             "INVALID_OCCURRED_AT",
             "validation",
-            p("occurredAt").isNull()
-            | F.try_to_timestamp(p("occurredAt"), F.lit("yyyy-MM-dd'T'HH:mm:ss'Z'")).isNotNull(),
+            f"parsed.occurredAt IS NULL OR {OCCURRED_AT} IS NOT NULL",
         ),
         # NULL occurredAt is its own failure (required field).
-        Rule("MISSING_OCCURRED_AT", "validation", p("occurredAt").isNotNull()),
-        Rule("MISSING_TENANT_ID", "validation", p("tenant.tenantId").isNotNull()),
-        Rule("MISSING_AUTHOR_ID", "validation", p("tenant.authorId").isNotNull()),
-        Rule("MISSING_STORY_ID", "validation", p("entity.storyId").isNotNull()),
+        Rule("MISSING_OCCURRED_AT", "validation", "parsed.occurredAt IS NOT NULL"),
+        Rule("MISSING_TENANT_ID", "validation", "parsed.tenant.tenantId IS NOT NULL"),
+        Rule("MISSING_AUTHOR_ID", "validation", "parsed.tenant.authorId IS NOT NULL"),
+        Rule("MISSING_STORY_ID", "validation", "parsed.entity.storyId IS NOT NULL"),
         # D3 metric checks (null metric ⇒ pass; only present-and-invalid fails).
         # NON_NUMERIC fires when the raw string is present but try_cast failed;
         # the range rules then only see successfully-cast values.
-        Rule("NON_NUMERIC_WORD_COUNT", "metric_check", word_raw.isNull() | word.isNotNull()),
-        Rule("NON_NUMERIC_REVISION_COUNT", "metric_check", rev_raw.isNull() | rev.isNotNull()),
+        Rule("NON_NUMERIC_WORD_COUNT", "metric_check", f"{word_raw} IS NULL OR {word} IS NOT NULL"),
+        Rule(
+            "NON_NUMERIC_REVISION_COUNT",
+            "metric_check",
+            f"{rev_raw} IS NULL OR {rev} IS NOT NULL",
+        ),
         Rule(
             "NON_NUMERIC_ENGAGEMENT_SCORE",
             "metric_check",
-            score_raw.isNull() | score.isNotNull(),
+            f"{score_raw} IS NULL OR {score} IS NOT NULL",
         ),
-        Rule("INVALID_WORD_COUNT", "metric_check", word.isNull() | (word >= 0)),
-        Rule("INVALID_REVISION_COUNT", "metric_check", rev.isNull() | (rev >= 0)),
+        Rule("INVALID_WORD_COUNT", "metric_check", f"{word} IS NULL OR {word} >= 0"),
+        Rule("INVALID_REVISION_COUNT", "metric_check", f"{rev} IS NULL OR {rev} >= 0"),
         Rule(
             "INVALID_ENGAGEMENT_SCORE",
             "metric_check",
-            ~reader_event | score.isNull() | ((score >= 0) & (score <= 100)),
+            f"NOT ({reader_event}) OR {score} IS NULL OR ({score} >= 0 AND {score} <= 100)",
         ),
     ]
     if as_of_ts is not None:
-        occurred = F.try_to_timestamp(p("occurredAt"), F.lit("yyyy-MM-dd'T'HH:mm:ss'Z'"))
-        limit = F.lit(as_of_ts).cast("timestamp") + F.expr("INTERVAL 5 MINUTES")
+        limit = f"{sql_timestamp('as_of_ts', as_of_ts)} + INTERVAL 5 MINUTES"
         rules.append(
             Rule(
                 "FUTURE_OCCURRED_AT",
                 "validation",
-                occurred.isNull() | (occurred <= limit),
+                f"{OCCURRED_AT} IS NULL OR {OCCURRED_AT} <= {limit}",
             )
         )
     return rules
 
 
 def rules_from_expectations(spec: list[dict]) -> list[Rule]:
-    """D8: compile an expectations list (parsed from YAML) into Rules.
+    """D8: an expectations list (parsed from YAML) as Rules.
 
     Each item: {reason, stage, expr} where ``expr`` is a Spark SQL boolean
     expression over the parsed columns that is True when the row passes,
     e.g. {reason: INVALID_PLAN, stage: enum_check,
           expr: "parsed.tenant.plan IS NULL OR parsed.tenant.plan IN ('free','pro')"}.
     """
-    return [Rule(it["reason"], it["stage"], F.expr(it["expr"])) for it in spec]
+    return [Rule(it["reason"], it["stage"], it["expr"]) for it in spec]
 
 
 def load_expectations_yaml(path: str) -> list[Rule]:
@@ -139,53 +148,41 @@ def load_expectations_yaml(path: str) -> list[Rule]:
     return rules_from_expectations(spec)
 
 
-def compile_contract(rules: list[Rule]) -> dict[str, Column]:
-    """Compile rules into the four derived columns the silver split needs.
+def compile_contract(rules: list[Rule]) -> dict[str, str]:
+    """Compile rules into the four derived columns the silver split needs,
+    one Spark SQL expression each.
 
-    Returns columns:
+    Returns expressions for:
       contract_ok         BOOLEAN — all rules pass
       reject_reason       STRING  — first failing rule's reason (priority order)
       reject_stage        STRING  — first failing rule's stage
       validation_errors   STRING  — JSON array of ALL failing reasons (D5)
     """
-    # coalesce each predicate to False so a NULL verdict counts as failure
+    # coalesce each predicate to FALSE so a NULL verdict counts as failure
     # (three-valued logic would otherwise leak rows out of BOTH branches)
-    ok = F.lit(True)
-    for r in rules:
-        ok = ok & F.coalesce(r.predicate, F.lit(False))
+    passed = [f"coalesce(({r.predicate}), FALSE)" for r in rules]
+    failed = [f"NOT {p}" for p in passed]
+    ok = " AND ".join(["TRUE", *passed])
 
-    reason = F.lit(None).cast("string")
-    stage = F.lit(None).cast("string")
-    # build when-chain in priority order (first failure wins)
-    reason_chain = None
-    stage_chain = None
-    for r in rules:
-        failed = ~F.coalesce(r.predicate, F.lit(False))
-        if reason_chain is None:
-            reason_chain = F.when(failed, F.lit(r.reason))
-            stage_chain = F.when(failed, F.lit(r.stage))
-        else:
-            reason_chain = reason_chain.when(failed, F.lit(r.reason))
-            stage_chain = stage_chain.when(failed, F.lit(r.stage))
-    if reason_chain is not None:
-        reason = reason_chain.otherwise(F.lit(None))
-        stage = stage_chain.otherwise(F.lit(None))
+    def first_failing(field: str) -> str:
+        # CASE in priority order: the first failure wins
+        if not rules:
+            return "CAST(NULL AS STRING)"
+        whens = " ".join(
+            f"WHEN {f} THEN {sql_string(getattr(r, field))}" for r, f in zip(rules, failed)
+        )
+        return f"CASE {whens} ELSE NULL END"
 
     # JSON array of every failed reason — array_compact drops the nulls of
     # passing rules, to_json renders deterministically.
-    errors = F.to_json(
-        F.array_compact(
-            F.array(
-                *[
-                    F.when(~F.coalesce(r.predicate, F.lit(False)), F.lit(r.reason))
-                    for r in rules
-                ]
-            )
-        )
+    errors = ", ".join(
+        f"CASE WHEN {f} THEN {sql_string(r.reason)} END" for r, f in zip(rules, failed)
     )
     return {
         "contract_ok": ok,
-        "reject_reason": reason,
-        "reject_stage": stage,
-        "validation_errors": F.when(~ok, errors),
+        "reject_reason": first_failing("reason"),
+        "reject_stage": first_failing("stage"),
+        "validation_errors": (
+            f"CASE WHEN NOT ({ok}) THEN to_json(array_compact(array({errors}))) END"
+        ),
     }

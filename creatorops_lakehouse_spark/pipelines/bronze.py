@@ -25,9 +25,9 @@ from __future__ import annotations
 import uuid
 from datetime import datetime, timezone
 
-import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from creatorops_lakehouse_spark.schemas import sql_string, sql_timestamp
 from creatorops_lakehouse_spark.sources.tables import TableSpec, write_table
 
 RAW_SCHEMA_VERSION = 1
@@ -47,14 +47,14 @@ def wrap_bronze(
     ingest_id = ingest_id or str(uuid.uuid4())
     if ingested_at is None:
         ingested_at = datetime.now(timezone.utc).strftime("%Y-%m-%d %H:%M:%S")
-    ts = F.lit(ingested_at).cast("timestamp")
-    return raw_lines.select(
-        F.lit(ingest_id).alias("ingest_id"),
-        F.lit(source).alias("source"),
-        F.col("value").alias("raw_json"),
-        F.lit(RAW_SCHEMA_VERSION).alias("raw_schema_version"),
-        ts.alias("ingested_at"),
-        F.to_date(ts).alias("p_ingest_date"),
+    ts = sql_timestamp("ingested_at", ingested_at)
+    return raw_lines.selectExpr(
+        f"{sql_string(ingest_id)} AS ingest_id",
+        f"{sql_string(source)} AS source",
+        "value AS raw_json",
+        f"{RAW_SCHEMA_VERSION} AS raw_schema_version",
+        f"{ts} AS ingested_at",
+        f"to_date({ts}) AS p_ingest_date",
     )
 
 

@@ -19,7 +19,9 @@ billions), so window partitions stay small — no skew salting needed here.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
+
+from creatorops_lakehouse_spark.pipelines.gold.retention import with_as_of
 
 
 def stage_bottlenecks(
@@ -27,30 +29,30 @@ def stage_bottlenecks(
     as_of_date: str | None = None,
     exact_percentiles: bool = False,
 ) -> DataFrame:
-    base = silver.filter(F.col("stage").isNotNull()).select(
-        "tenant_id", "story_id", "series_id", "occurred_at", "stage"
-    )
-    w = Window.partitionBy("tenant_id", "story_id").orderBy(F.col("occurred_at").asc())
-    transitions = (
-        base.withColumn("next_occurred_at", F.lead("occurred_at").over(w))
-        .withColumn(
-            "duration_seconds",
-            F.col("next_occurred_at").cast("long") - F.col("occurred_at").cast("long"),
-        )
-        .filter(F.col("next_occurred_at").isNotNull())
-        .filter(F.col("duration_seconds") >= 0)
-        .withColumn("duration_hours", F.col("duration_seconds") / F.lit(3600.0))
-    )
     pct = "percentile" if exact_percentiles else "percentile_approx"
-    out = (
-        transitions.groupBy("tenant_id", "story_id", "series_id", "stage")
-        .agg(
-            F.count("*").alias("stage_hops"),
-            F.avg("duration_hours").alias("avg_hours_in_stage"),
-            F.expr(f"{pct}(duration_hours, 0.5)").alias("p50_hours_in_stage"),
-            F.expr(f"{pct}(duration_hours, 0.9)").alias("p90_hours_in_stage"),
-            F.max("duration_hours").alias("max_hours_in_stage"),
+    transitions = (
+        silver.where("stage IS NOT NULL")
+        .selectExpr(
+            "tenant_id",
+            "story_id",
+            "series_id",
+            "occurred_at",
+            "stage",
+            "lead(occurred_at) OVER (PARTITION BY tenant_id, story_id"
+            " ORDER BY occurred_at ASC) AS next_occurred_at",
         )
+        .selectExpr(
+            "*",
+            "CAST(next_occurred_at AS BIGINT) - CAST(occurred_at AS BIGINT) AS duration_seconds",
+        )
+        .where("next_occurred_at IS NOT NULL AND duration_seconds >= 0")
+        .selectExpr("*", "duration_seconds / 3600.0D AS duration_hours")
     )
-    stamp = F.current_date() if as_of_date is None else F.lit(as_of_date).cast("date")
-    return out.withColumn("as_of_date", stamp)
+    out = transitions.groupBy("tenant_id", "story_id", "series_id", "stage").agg(
+        F.expr("count(*) AS stage_hops"),
+        F.expr("avg(duration_hours) AS avg_hours_in_stage"),
+        F.expr(f"{pct}(duration_hours, 0.5) AS p50_hours_in_stage"),
+        F.expr(f"{pct}(duration_hours, 0.9) AS p90_hours_in_stage"),
+        F.expr("max(duration_hours) AS max_hours_in_stage"),
+    )
+    return with_as_of(out, as_of_date)

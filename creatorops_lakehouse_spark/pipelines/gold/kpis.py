@@ -24,14 +24,13 @@ GRAIN = ("p_event_date", "tenant_id", "author_id", "story_id", "series_id")
 def writing_velocity_daily(silver: DataFrame) -> DataFrame:
     """chapters_written / words_written / avg_words_per_chapter per author-story-day."""
     return (
-        silver.filter(F.col("event_type") == "chapter_written")
+        silver.where("event_type = 'chapter_written'")
         .groupBy(*GRAIN)
         .agg(
-            F.count("*").alias("chapters_written"),
-            F.sum("word_count").alias("words_written"),
-            F.avg("word_count").alias("avg_words_per_chapter"),
+            F.expr("count(*) AS chapters_written"),
+            F.expr("coalesce(sum(word_count), 0) AS words_written"),
+            F.expr("avg(word_count) AS avg_words_per_chapter"),
         )
-        .withColumn("words_written", F.coalesce(F.col("words_written"), F.lit(0)))
     )
 
 
@@ -40,19 +39,16 @@ def revision_churn_daily(silver: DataFrame) -> DataFrame:
 
     A scene_revised event with no revisionCount metric counts as 1 revision.
     """
-    rev = F.coalesce(F.col("revision_count"), F.lit(1))
     return (
-        silver.filter(F.col("event_type") == "scene_revised")
-        .withColumn("_rev", rev)
+        silver.where("event_type = 'scene_revised'")
         .groupBy(*GRAIN)
         .agg(
-            F.count("*").alias("revision_events"),
-            F.sum("_rev").alias("revision_count_sum"),
+            F.expr("count(*) AS revision_events"),
+            F.expr("sum(coalesce(revision_count, 1)) AS revision_count_sum"),
         )
-        .withColumn(
-            "revision_churn_index",
-            F.when(F.col("revision_events") == 0, F.lit(0.0)).otherwise(
-                F.col("revision_count_sum") / F.col("revision_events")
-            ),
+        .selectExpr(
+            "*",
+            "CASE WHEN revision_events = 0 THEN 0.0D"
+            " ELSE revision_count_sum / revision_events END AS revision_churn_index",
         )
     )

@@ -14,35 +14,35 @@ join input is already reduced by the daily grain.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
+
+from creatorops_lakehouse_spark.schemas import sql_date
 
 GRAIN = ("p_event_date", "tenant_id", "story_id", "series_id")
 
 
-def band_10(score: Column) -> Column:
-    """Decile band: 0-9→0, 10-19→10, …, 90-100→90; null→null."""
-    clamped = F.least(F.greatest(score, F.lit(0.0)), F.lit(100.0))
-    return F.when(score.isNull(), F.lit(None)).otherwise(
-        F.floor(clamped / F.lit(10.0)) * F.lit(10.0)
-    )
+def band_10(score: str) -> str:
+    """Decile band of the SQL expression ``score``: 0-9→0, 10-19→10, …,
+    90-100→90; null→null."""
+    clamped = f"least(greatest({score}, 0.0D), 100.0D)"
+    return f"CASE WHEN {score} IS NULL THEN NULL ELSE floor({clamped} / 10.0D) * 10.0D END"
 
 
-def _as_of(df: DataFrame, as_of_date: str | None) -> DataFrame:
-    stamp = (
-        F.current_date() if as_of_date is None else F.lit(as_of_date).cast("date")
-    )
-    return df.withColumn("as_of_date", stamp)
+def with_as_of(df: DataFrame, as_of_date: str | None) -> DataFrame:
+    """Append the ``as_of_date`` stamp; None stamps the wall-clock date."""
+    stamp = "current_date()" if as_of_date is None else sql_date("as_of_date", as_of_date)
+    return df.selectExpr("*", f"{stamp} AS as_of_date")
 
 
 def engagement_bands_daily(silver: DataFrame, as_of_date: str | None = None) -> DataFrame:
     """engagement_events / avg_score_in_band per story-day-band."""
-    return _as_of(
-        silver.filter(F.col("event_type") == "reader_engagement")
-        .withColumn("score_band", band_10(F.col("engagement_score")))
+    return with_as_of(
+        silver.where("event_type = 'reader_engagement'")
+        .selectExpr("*", f"{band_10('engagement_score')} AS score_band")
         .groupBy(*GRAIN, "score_band")
         .agg(
-            F.count("*").alias("engagement_events"),
-            F.avg("engagement_score").alias("avg_score_in_band"),
+            F.expr("count(*) AS engagement_events"),
+            F.expr("avg(engagement_score) AS avg_score_in_band"),
         ),
         as_of_date,
     )
@@ -51,24 +51,23 @@ def engagement_bands_daily(silver: DataFrame, as_of_date: str | None = None) -> 
 def dropoff_rate_daily(silver: DataFrame, as_of_date: str | None = None) -> DataFrame:
     """dropoff_rate = dropoffs / (engagements + dropoffs) per story-day."""
     eng = (
-        silver.filter(F.col("event_type") == "reader_engagement")
+        silver.where("event_type = 'reader_engagement'")
         .groupBy(*GRAIN)
-        .agg(F.count("*").alias("engagement_events"))
+        .agg(F.expr("count(*) AS engagement_events"))
     )
     drp = (
-        silver.filter(F.col("event_type") == "reader_dropoff")
+        silver.where("event_type = 'reader_dropoff'")
         .groupBy(*GRAIN)
-        .agg(F.count("*").alias("dropoff_events"))
+        .agg(F.expr("count(*) AS dropoff_events"))
     )
-    return _as_of(
+    return with_as_of(
         eng.join(drp, on=list(GRAIN), how="full")
         .na.fill(0, subset=["engagement_events", "dropoff_events"])
-        .withColumn("total_events", F.col("engagement_events") + F.col("dropoff_events"))
-        .withColumn(
-            "dropoff_rate",
-            F.when(F.col("total_events") == 0, F.lit(0.0)).otherwise(
-                F.col("dropoff_events") / F.col("total_events")
-            ),
+        .selectExpr(
+            "*",
+            "engagement_events + dropoff_events AS total_events",
+            "CASE WHEN engagement_events + dropoff_events = 0 THEN 0.0D"
+            " ELSE dropoff_events / (engagement_events + dropoff_events) END AS dropoff_rate",
         ),
         as_of_date,
     )

@@ -22,20 +22,81 @@ Scale notes:
 from __future__ import annotations
 
 from datetime import datetime, timezone
-from itertools import chain
 
-import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 
-from creatorops_lakehouse_spark.contract import Rule, compile_contract, default_rules
-from creatorops_lakehouse_spark.schemas import RAW_EVENT_SCHEMA, STAGE_BY_EVENT_TYPE
-
-#: ISO-8601 Zulu format used by the event contract (FIXTURES.md A1).
-TS_FMT = "yyyy-MM-dd'T'HH:mm:ss'Z'"
+from creatorops_lakehouse_spark.contract import (
+    OCCURRED_AT,
+    Rule,
+    compile_contract,
+    default_rules,
+)
+from creatorops_lakehouse_spark.schemas import (
+    RAW_EVENT_SCHEMA,
+    STAGE_BY_EVENT_TYPE,
+    sql_date,
+    sql_string,
+    sql_timestamp,
+)
 
 #: Days after which an event is flagged late (transform_local.py:109;
 #: runbooks/silver-transform.md:92-95).
 LATE_EVENT_DAYS = 7
+
+#: RAW_EVENT_SCHEMA plus the PERMISSIVE corrupt-record column, as SQL type text.
+_PARSE_SCHEMA = RAW_EVENT_SCHEMA.simpleString()[: -len(">")] + ",_corrupt_record:string>"
+
+_EMPTY_MAP = "CAST(map() AS MAP<STRING, STRING>)"
+
+#: Authoritative event_type → stage mapping as a literal MAP (D2): a lookup
+#: instead of a 10-branch CASE, constant-folded by Catalyst, and the single
+#: source of truth stays schemas.STAGE_BY_EVENT_TYPE.
+_STAGE_MAP = "map({})".format(
+    ", ".join(f"{sql_string(k)}, {sql_string(v)}" for k, v in STAGE_BY_EVENT_TYPE.items())
+)
+
+#: The good branch's projection to the typed Silver schema
+#: (sql/ddl/02_silver_events.sql:8-52 + lineage, transform_local.py:117-153),
+#: in schemas.SILVER_EVENT_SCHEMA order.
+_SILVER_PROJECTION: tuple[str, ...] = (
+    "parsed.eventId AS event_id",
+    "parsed.eventType AS event_type",
+    "parsed.eventVersion AS event_version",
+    "occurred_at",
+    "ingested_at",
+    "p_event_date",
+    "parsed.tenant.tenantId AS tenant_id",
+    "parsed.tenant.authorId AS author_id",
+    "parsed.tenant.plan AS plan",
+    "parsed.entity.seriesId AS series_id",
+    "parsed.entity.storyId AS story_id",
+    "parsed.entity.chapterId AS chapter_id",
+    "parsed.entity.sceneId AS scene_id",
+    # D2: stage is DERIVED from event_type; the producer-supplied stage is
+    # preserved in metadata_map['producerStage']
+    # (runbooks/silver-transform.md:63-80)
+    f"{_STAGE_MAP}[parsed.eventType] AS stage",
+    # try_cast: ANSI mode would crash on non-numeric metric strings; the
+    # contract's NON_NUMERIC_* rules quarantine those rows, but the good
+    # branch must still never throw on values the contract permits.
+    "try_cast(parsed.metrics['revisionCount'] AS INT) AS revision_count",
+    "try_cast(parsed.metrics['wordCount'] AS INT) AS word_count",
+    "try_cast(parsed.metrics['engagementScore'] AS DOUBLE) AS engagement_score",
+    f"coalesce(parsed.metrics, {_EMPTY_MAP}) AS metrics_map",
+    f"map_concat(coalesce(parsed.metadata, {_EMPTY_MAP}), CASE WHEN parsed.stage IS NOT NULL"
+    f" THEN map('producerStage', parsed.stage) ELSE {_EMPTY_MAP} END) AS metadata_map",
+    "parsed.producer.service AS producer_service",
+    "parsed.producer.env AS producer_env",
+    "parsed.producer.region AS producer_region",
+    "parsed.producer.traceId AS trace_id",
+    "event_hash",
+    "coalesce(is_late_event, FALSE) AS is_late_event",
+    "ingest_id",
+    "source",
+    "raw_schema_version",
+    "p_ingest_date",
+    "raw_json",
+)
 
 
 def parse(bronze: DataFrame) -> DataFrame:
@@ -46,54 +107,24 @@ def parse(bronze: DataFrame) -> DataFrame:
     malformed JSON, so parse failure is detected via a corrupt-record
     column rather than struct nullness.
     """
-    from pyspark.sql.types import StringType, StructField, StructType
+    return bronze.selectExpr(
+        "*",
+        f"from_json(raw_json, '{_PARSE_SCHEMA}', map('mode', 'PERMISSIVE',"
+        " 'columnNameOfCorruptRecord', '_corrupt_record')) AS parsed",
+    ).selectExpr("*", "parsed IS NOT NULL AND parsed._corrupt_record IS NULL AS parse_ok")
 
-    schema_with_corrupt = StructType(
-        list(RAW_EVENT_SCHEMA.fields) + [StructField("_corrupt_record", StringType())]
+
+def stable_event_hash() -> str:
+    """D6 stable-field idempotency hash (runbooks/silver-transform.md:100-112),
+    as SQL: sha2 over the business identity, not the raw payload bytes —
+    equal events hash equal even if whitespace/key-order differ."""
+    fields = (
+        "eventType", "occurredAt", "tenant.tenantId", "tenant.authorId",
+        "entity.seriesId", "entity.storyId", "entity.chapterId", "entity.sceneId",
+        "metrics['wordCount']", "metrics['revisionCount']", "metrics['engagementScore']",
     )
-    parsed = F.from_json(
-        F.col("raw_json"),
-        schema_with_corrupt,
-        {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": "_corrupt_record"},
-    )
-    return bronze.withColumn("parsed", parsed).withColumn(
-        "parse_ok",
-        F.col("parsed").isNotNull() & F.col("parsed._corrupt_record").isNull(),
-    )
-
-
-def _stage_map_col() -> F.Column:
-    """Authoritative event_type → stage mapping as a literal MAP (D2).
-
-    A literal map lookup instead of a 10-branch when-chain: constant-folded
-    by Catalyst, and the single source of truth stays schemas.STAGE_BY_EVENT_TYPE.
-    """
-    pairs = list(chain.from_iterable((F.lit(k), F.lit(v)) for k, v in STAGE_BY_EVENT_TYPE.items()))
-    return F.create_map(*pairs)
-
-
-def stable_event_hash() -> F.Column:
-    """D6 stable-field idempotency hash (runbooks/silver-transform.md:100-112):
-    sha2 over the business identity, not the raw payload bytes — equal
-    events hash equal even if whitespace/key-order differ."""
-    p = lambda f: F.col(f"parsed.{f}")  # noqa: E731
-    return F.sha2(
-        F.concat_ws(
-            "||",
-            F.coalesce(p("eventType"), F.lit("")),
-            F.coalesce(p("occurredAt"), F.lit("")),
-            F.coalesce(p("tenant.tenantId"), F.lit("")),
-            F.coalesce(p("tenant.authorId"), F.lit("")),
-            F.coalesce(p("entity.seriesId"), F.lit("")),
-            F.coalesce(p("entity.storyId"), F.lit("")),
-            F.coalesce(p("entity.chapterId"), F.lit("")),
-            F.coalesce(p("entity.sceneId"), F.lit("")),
-            F.coalesce(p("metrics").getItem("wordCount"), F.lit("")),
-            F.coalesce(p("metrics").getItem("revisionCount"), F.lit("")),
-            F.coalesce(p("metrics").getItem("engagementScore"), F.lit("")),
-        ),
-        256,
-    )
+    parts = ", ".join(f"coalesce(parsed.{f}, '')" for f in fields)
+    return f"sha2(concat_ws('||', {parts}), 256)"
 
 
 def validate(
@@ -106,80 +137,21 @@ def validate(
     ``as_of_ts`` parameterizes the D4 future-event guard (and is the
     deterministic stand-in for current_timestamp()).
     """
-    rules = default_rules(as_of_ts=as_of_ts)
-    if extra_rules:
-        rules = rules + list(extra_rules)
-    cols = compile_contract(rules)
-    occurred = F.try_to_timestamp(F.col("parsed.occurredAt"), F.lit(TS_FMT))
-    out = (
-        parsed.withColumn("contract_ok", cols["contract_ok"])
-        .withColumn("reject_reason", cols["reject_reason"])
-        .withColumn("reject_stage", cols["reject_stage"])
-        .withColumn("validation_errors", cols["validation_errors"])
-        .withColumn("occurred_at", occurred)
-        .withColumn("p_event_date", F.to_date(occurred))
-        .withColumn("event_hash", stable_event_hash())
-        .withColumn(
-            "is_late_event",
-            F.datediff(F.col("p_ingest_date"), F.to_date(occurred)) > LATE_EVENT_DAYS,
-        )
+    rules = default_rules(as_of_ts=as_of_ts) + list(extra_rules or ())
+    verdict = compile_contract(rules)
+    return parsed.selectExpr(
+        "*",
+        *(f"{sql} AS {name}" for name, sql in verdict.items()),
+        f"{OCCURRED_AT} AS occurred_at",
+        f"to_date({OCCURRED_AT}) AS p_event_date",
+        f"{stable_event_hash()} AS event_hash",
+        f"datediff(p_ingest_date, to_date({OCCURRED_AT})) > {LATE_EVENT_DAYS} AS is_late_event",
     )
-    return out
 
 
 def to_silver(validated: DataFrame) -> DataFrame:
-    """Project the good branch to the typed Silver schema
-    (sql/ddl/02_silver_events.sql:8-52 + lineage, transform_local.py:117-153).
-
-    D2: stage is DERIVED from event_type; the producer-supplied stage is
-    preserved in metadata_map['producerStage']
-    (runbooks/silver-transform.md:63-80)."""
-    p = lambda f: F.col(f"parsed.{f}")  # noqa: E731
-    derived_stage = _stage_map_col()[p("eventType")]
-    producer_stage_meta = F.when(
-        p("stage").isNotNull(), F.create_map(F.lit("producerStage"), p("stage"))
-    ).otherwise(F.create_map().cast("map<string,string>"))
-    metadata = F.map_concat(
-        F.coalesce(p("metadata"), F.create_map().cast("map<string,string>")),
-        producer_stage_meta,
-    )
-    return validated.filter(F.col("contract_ok")).select(
-        p("eventId").alias("event_id"),
-        p("eventType").alias("event_type"),
-        p("eventVersion").alias("event_version"),
-        F.col("occurred_at"),
-        F.col("ingested_at"),
-        F.col("p_event_date"),
-        p("tenant.tenantId").alias("tenant_id"),
-        p("tenant.authorId").alias("author_id"),
-        p("tenant.plan").alias("plan"),
-        p("entity.seriesId").alias("series_id"),
-        p("entity.storyId").alias("story_id"),
-        p("entity.chapterId").alias("chapter_id"),
-        p("entity.sceneId").alias("scene_id"),
-        derived_stage.alias("stage"),
-        # try_cast: ANSI mode would crash on non-numeric metric strings; the
-        # contract's NON_NUMERIC_* rules quarantine those rows, but the good
-        # branch must still never throw on values the contract permits.
-        p("metrics").getItem("revisionCount").try_cast("int").alias("revision_count"),
-        p("metrics").getItem("wordCount").try_cast("int").alias("word_count"),
-        p("metrics").getItem("engagementScore").try_cast("double").alias("engagement_score"),
-        F.coalesce(p("metrics"), F.create_map().cast("map<string,string>")).alias(
-            "metrics_map"
-        ),
-        metadata.alias("metadata_map"),
-        p("producer.service").alias("producer_service"),
-        p("producer.env").alias("producer_env"),
-        p("producer.region").alias("producer_region"),
-        p("producer.traceId").alias("trace_id"),
-        F.col("event_hash"),
-        F.coalesce(F.col("is_late_event"), F.lit(False)).alias("is_late_event"),
-        F.col("ingest_id"),
-        F.col("source"),
-        F.col("raw_schema_version"),
-        F.col("p_ingest_date"),
-        F.col("raw_json"),
-    )
+    """Project the good branch to the typed Silver schema."""
+    return validated.where("contract_ok").selectExpr(*_SILVER_PROJECTION)
 
 
 def to_rejects(validated: DataFrame, rejected_at: str | None = None) -> DataFrame:
@@ -187,18 +159,18 @@ def to_rejects(validated: DataFrame, rejected_at: str | None = None) -> DataFram
     (sql/ddl/03_silver_rejects.sql:8-19; reasons transform_local.py:157-169)."""
     if rejected_at is None:
         rejected_at = datetime.now(timezone.utc).strftime("%Y-%m-%d %H:%M:%S")
-    return validated.filter(~F.col("contract_ok")).select(
-        F.col("event_hash"),
-        F.col("reject_reason"),
-        F.col("reject_stage"),
-        F.col("validation_errors"),
-        F.col("ingest_id"),
-        F.col("source"),
-        F.col("raw_schema_version"),
-        F.col("ingested_at"),
-        F.lit(rejected_at).cast("timestamp").alias("rejected_at"),
-        F.col("p_ingest_date"),
-        F.col("raw_json"),
+    return validated.where("NOT contract_ok").selectExpr(
+        "event_hash",
+        "reject_reason",
+        "reject_stage",
+        "validation_errors",
+        "ingest_id",
+        "source",
+        "raw_schema_version",
+        "ingested_at",
+        f"{sql_timestamp('rejected_at', rejected_at)} AS rejected_at",
+        "p_ingest_date",
+        "raw_json",
     )
 
 
@@ -215,13 +187,9 @@ def dedup_latest(
     At scale this is one hash-shuffle on the key; pair with a partition
     filter (incremental mode) to bound state.
     """
-    order = [F.col(order_col).desc()] + [F.col(c).desc() for c in tiebreak]
-    w = Window.partitionBy(*keys).orderBy(*order)
-    return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
+    order = ", ".join(f"{c} DESC" for c in (order_col, *tiebreak))
+    rank = f"row_number() OVER (PARTITION BY {', '.join(keys)} ORDER BY {order})"
+    return df.selectExpr("*", f"{rank} AS _rn").where("_rn = 1").drop("_rn")
 
 
 def transform(
@@ -239,11 +207,8 @@ def transform(
     down to partition pruning on p_ingest_date.
     """
     if ingest_date_range is not None:
-        start, end = ingest_date_range
-        bronze = bronze.filter(
-            (F.col("p_ingest_date") >= F.lit(start).cast("date"))
-            & (F.col("p_ingest_date") <= F.lit(end).cast("date"))
-        )
+        start, end = (sql_date("ingest_date_range", d) for d in ingest_date_range)
+        bronze = bronze.where(f"p_ingest_date >= {start} AND p_ingest_date <= {end}")
     validated = validate(parse(bronze), as_of_ts=as_of_ts, extra_rules=extra_rules)
     # one persist instead of the reference's 4× scan recompute (SURVEY §3/§4);
     # scoped so the query-registry wrapper / bench loop can release it once

@@ -13,6 +13,8 @@ Capability parity targets (reference file:line):
 
 from __future__ import annotations
 
+from datetime import datetime
+
 from pyspark.sql.types import (
     BooleanType,
     DateType,
@@ -127,40 +129,9 @@ BRONZE_SCHEMA = StructType(
 )
 
 #: Typed silver event log (sql/ddl/02_silver_events.sql:8-52; we implement
-#: the typed-DDL variant AND keep the open maps for forward-compat).
-SILVER_EVENT_COLUMNS: tuple[str, ...] = (
-    "event_id",
-    "event_type",
-    "event_version",
-    "occurred_at",
-    "ingested_at",
-    "p_event_date",
-    "tenant_id",
-    "author_id",
-    "plan",
-    "series_id",
-    "story_id",
-    "chapter_id",
-    "scene_id",
-    "stage",
-    "revision_count",
-    "word_count",
-    "engagement_score",
-    "metrics_map",
-    "metadata_map",
-    "producer_service",
-    "producer_env",
-    "producer_region",
-    "trace_id",
-    "event_hash",
-    "is_late_event",
-    # lineage carried from bronze (transform_local.py:147-152)
-    "ingest_id",
-    "source",
-    "raw_schema_version",
-    "p_ingest_date",
-)
-
+#: the typed-DDL variant AND keep the open maps for forward-compat), in the
+#: column order ``pipelines.silver.to_silver`` writes. Lineage is carried
+#: from bronze (transform_local.py:147-152), ``raw_json`` included for replay.
 SILVER_EVENT_SCHEMA = StructType(
     [
         StructField("event_id", StringType()),
@@ -192,6 +163,7 @@ SILVER_EVENT_SCHEMA = StructType(
         StructField("source", StringType()),
         StructField("raw_schema_version", IntegerType()),
         StructField("p_ingest_date", DateType()),
+        StructField("raw_json", StringType()),
     ]
 )
 
@@ -215,3 +187,32 @@ REJECT_SCHEMA = StructType(
 
 #: Reject stages (docs/runbooks/silver-transform.md:124-133).
 REJECT_STAGES: tuple[str, ...] = ("parsing", "validation", "enum_check", "metric_check")
+
+
+def sql_string(value: str) -> str:
+    """``value`` as a Spark SQL string literal (quotes and backslashes escaped)."""
+    return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def _checked(name: str, value: str, fmt: str, shape: str) -> str:
+    try:
+        datetime.strptime(value, fmt)
+    except (TypeError, ValueError):
+        raise ValueError(f"{name} must be '{shape}', got {value!r}") from None
+    return value
+
+
+def sql_timestamp(name: str, value: str) -> str:
+    """SQL for the timestamp parameter ``name`` ('YYYY-MM-DD HH:MM:SS', UTC).
+
+    Checked when the plan is built, so a malformed value fails here, naming
+    the parameter, instead of inside a write job under ANSI cast; only a
+    checked value is spliced into SQL text."""
+    checked = _checked(name, value, "%Y-%m-%d %H:%M:%S", "YYYY-MM-DD HH:MM:SS")
+    return f"CAST('{checked}' AS TIMESTAMP)"
+
+
+def sql_date(name: str, value: str) -> str:
+    """SQL for the date parameter ``name`` ('YYYY-MM-DD'), checked like
+    ``sql_timestamp``."""
+    return f"CAST('{_checked(name, value, '%Y-%m-%d', 'YYYY-MM-DD')}' AS DATE)"

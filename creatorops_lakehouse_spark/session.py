@@ -69,6 +69,14 @@ DEFAULT_CONF: dict[str, str] = {
     # Parquet writers: match reference's column layout expectations.
     "spark.sql.parquet.compression.codec": "snappy",
     "spark.sql.parquet.outputTimestampType": "TIMESTAMP_MICROS",
+    # Generated-class cache (static conf). At Spark's default of 100
+    # entries a medallion day's generated classes were evicted before the
+    # next day reused them: 50-70 Janino compiles a day, against 10 at 1000
+    # entries (the 10 inline that day's date and timestamp literals). The
+    # 30-query panel of perfbench's query_mix ran as fast at 300 as at 1000
+    # or 4000 entries; 1000 leaves room for a day and the panel in one
+    # session, and JVM non-heap memory did not grow.
+    "spark.sql.codegen.cache.maxEntries": "1000",
 }
 
 

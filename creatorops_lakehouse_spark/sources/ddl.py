@@ -3,9 +3,9 @@
 The reference ships declarative Delta DDL (sql/ddl/01_bronze.sql,
 02_silver_events.sql, 03_silver_rejects.sql) that its jobs never execute
 (they write by path). Here the same catalog surface is generated from the
-single source of truth — the StructTypes in schemas.py — and actually
-executed: external tables over the lakehouse paths, partitioned as in
-§1.4, so spark.sql('SELECT ... FROM silver.creatorops_events') works
+single source of truth — the StructTypes in schemas.py, as the table
+specs declare them — and actually executed: external tables over the
+lakehouse paths, partitioned as in §1.4, so spark.sql('SELECT ... FROM silver.creatorops_events') works
 against the tables the pipeline writes. USING parquet locally; the Delta
 swap changes only the USING clause (format-pluggable like tables.py).
 """
@@ -13,38 +13,21 @@ swap changes only the USING clause (format-pluggable like tables.py).
 from __future__ import annotations
 
 from pyspark.sql import SparkSession
-from pyspark.sql.types import StructType
 
-from creatorops_lakehouse_spark.schemas import (
-    BRONZE_SCHEMA,
-    REJECT_SCHEMA,
-    SILVER_EVENT_SCHEMA,
-)
 from creatorops_lakehouse_spark.sources.tables import TableSpec, lakehouse_specs
 
 
-def _ddl_columns(schema: StructType, partition_by: tuple[str, ...]) -> str:
-    cols = [
-        f"  {f.name} {f.dataType.simpleString().upper()}"
-        for f in schema.fields
-        if f.name not in partition_by
-    ]
-    cols += [
-        f"  {f.name} {f.dataType.simpleString().upper()}"
-        for f in schema.fields
-        if f.name in partition_by
-    ]
-    return ",\n".join(cols)
-
-
-def create_table_ddl(spec: TableSpec, schema: StructType) -> str:
-    """CREATE TABLE ... USING <format> PARTITIONED BY ... LOCATION ..."""
+def create_table_ddl(spec: TableSpec) -> str:
+    """CREATE TABLE ... USING <format> PARTITIONED BY ... LOCATION ... over
+    ``spec.schema``, whose partition columns already come last."""
+    cols = ",\n".join(
+        f"  {f.name} {f.dataType.simpleString().upper()}" for f in spec.schema.fields
+    )
     parts = (
         f"\nPARTITIONED BY ({', '.join(spec.partition_by)})" if spec.partition_by else ""
     )
     return (
-        f"CREATE TABLE IF NOT EXISTS {spec.name} (\n"
-        f"{_ddl_columns(schema, spec.partition_by)}\n)"
+        f"CREATE TABLE IF NOT EXISTS {spec.name} (\n{cols}\n)"
         f"\nUSING {spec.format}{parts}"
         f"\nLOCATION '{spec.path}'"
     )
@@ -56,19 +39,14 @@ def register_catalog(spark: SparkSession, root: str) -> list[str]:
     written (external tables need existing data for schema-on-location), or
     rely on the explicit column lists here. MSCK repairs partition info."""
     specs = lakehouse_specs(root)
-    schemas = {
-        "bronze_events_raw": BRONZE_SCHEMA,
-        "silver_events": SILVER_EVENT_SCHEMA,
-        "silver_rejects": REJECT_SCHEMA,
-    }
     executed: list[str] = []
     for db in ("bronze", "silver"):
         stmt = f"CREATE DATABASE IF NOT EXISTS {db}"
         spark.sql(stmt)
         executed.append(stmt)
-    for key, schema in schemas.items():
+    for key in ("bronze_events_raw", "silver_events", "silver_rejects"):
         spec = specs[key]
-        ddl = create_table_ddl(spec, schema)
+        ddl = create_table_ddl(spec)
         spark.sql(ddl)
         if spec.partition_by:
             spark.sql(f"MSCK REPAIR TABLE {spec.name}")

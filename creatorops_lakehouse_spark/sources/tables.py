@@ -25,6 +25,9 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructField, StructType
+
+from creatorops_lakehouse_spark.schemas import BRONZE_SCHEMA, REJECT_SCHEMA, SILVER_EVENT_SCHEMA
 
 
 @dataclass(frozen=True)
@@ -34,10 +37,25 @@ class TableSpec:
     partition_by: tuple[str, ...] = ()
     format: str = "parquet"
     properties: dict[str, str] = field(default_factory=dict)
+    #: declared read schema (``read_schema``); None infers it from the files
+    schema: StructType | None = None
+
+
+def read_schema(schema: StructType, partition_by: tuple[str, ...] = ()) -> StructType:
+    """The schema a file read of a table written with ``schema`` returns:
+    partition columns last, every column nullable (as Spark reads files)."""
+    fields = [f for f in schema.fields if f.name not in partition_by]
+    fields += [schema[c] for c in partition_by]
+    return StructType([StructField(f.name, f.dataType) for f in fields])
 
 
 def read_table(spark: SparkSession, spec: TableSpec) -> DataFrame:
-    return spark.read.format(spec.format).load(spec.path)
+    """Read a table; a declared ``spec.schema`` skips the Spark job that
+    infers the schema from the Parquet footers."""
+    reader = spark.read.format(spec.format)
+    if spec.schema is not None:
+        reader = reader.schema(spec.schema)
+    return reader.load(spec.path)
 
 
 def write_table(
@@ -78,19 +96,21 @@ def compact_table(
 
 
 def lakehouse_specs(root: str) -> dict[str, TableSpec]:
-    """The medallion table set, mirroring the reference layout (§1.4/§1.5)."""
+    """The medallion table set, mirroring the reference layout (§1.4/§1.5).
+    Bronze, silver and rejects declare their read schemas; gold tables, which
+    an empty KPI leaves as a directory with no files, infer theirs."""
     return {
         "bronze_events_raw": TableSpec(
             "bronze.creatorops_events_raw", f"{root}/bronze/creatorops_events_raw",
-            ("p_ingest_date",),
+            ("p_ingest_date",), schema=read_schema(BRONZE_SCHEMA, ("p_ingest_date",)),
         ),
         "silver_events": TableSpec(
             "silver.creatorops_events", f"{root}/silver/creatorops_events",
-            ("p_event_date",),
+            ("p_event_date",), schema=read_schema(SILVER_EVENT_SCHEMA, ("p_event_date",)),
         ),
         "silver_rejects": TableSpec(
             "silver.creatorops_events_rejects", f"{root}/silver/creatorops_rejects",
-            ("p_ingest_date",),
+            ("p_ingest_date",), schema=read_schema(REJECT_SCHEMA, ("p_ingest_date",)),
         ),
         "gold_writing_velocity": TableSpec(
             "gold.kpi_writing_velocity_daily", f"{root}/gold/kpi_writing_velocity_daily",

@@ -57,6 +57,11 @@ CASES = [
     ("MISSING_AUTHOR_ID", "validation", _variant("e9", **{"tenant.authorId": None})),
     ("MISSING_STORY_ID", "validation", _variant("e10", **{"entity.storyId": None})),
     ("INVALID_WORD_COUNT", "metric_check", _variant("e11", **{"metrics.wordCount": -5})),
+    (
+        "INVALID_REVISION_COUNT",
+        "metric_check",
+        _variant("e17", **{"metrics.revisionCount": -1}),
+    ),
     # ANSI-mode regression guards: present-but-non-numeric metric strings must
     # quarantine, not throw CAST_INVALID_INPUT (contract.py uses try_cast).
     ("NON_NUMERIC_WORD_COUNT", "metric_check", _variant("e14", **{"metrics.wordCount": "abc"})),

@@ -109,3 +109,24 @@ def test_sql_views_match_dataframe_results(spark):
     got_counts = {(r[0], r[1]): r[-1] for r in df_rows}
     sql_counts = {(r[0], r[1]): r[-1] for r in sql_rows}
     assert got_counts == sql_counts
+
+
+def test_declared_schemas_match_written_files(spark, tmp_path):
+    """Each declared read schema in lakehouse_specs equals the schema Spark
+    infers from the files run_all writes: names, types, order and (all
+    nullable on a file read) nullability. An as_of_ts inside the generated
+    days turns the later events into FUTURE_OCCURRED_AT rejects, so the
+    rejects table has files to infer from too."""
+    root = str(tmp_path / "lh")
+    cfg = GeneratorConfig(seed=5, n_tenants=1, authors_per_tenant=1, stories_per_author=1, days=4)
+    stats = run_all(
+        spark, root, cfg=cfg, as_of_ts="2026-04-02 12:00:00", as_of_date="2026-04-03",
+        ingested_at="2026-04-03 00:00:00",
+    )
+    assert stats.silver_rows > 0 and stats.reject_rows > 0
+    declared = {k: s for k, s in lakehouse_specs(root).items() if s.schema is not None}
+    assert set(declared) == {"bronze_events_raw", "silver_events", "silver_rejects"}
+    for key, spec in declared.items():
+        inferred = spark.read.format(spec.format).load(spec.path).schema
+        assert spec.schema == inferred, key
+        assert read_table(spark, spec).schema == inferred, key
